@@ -15,9 +15,9 @@ The handler core is a pure function (status, body) so the contract
 tests run without sockets; `serve` wraps it in a stdlib ThreadingHTTP
 server for real HTTP (test/index.js-style e2e). The record producer is
 injected exactly like the reference's proxyquire'd kinesisReader stub —
-the Spark-backed producer closes over (spark, sf_dir) and runs the
-records pipeline; its collect() is the API response materialization,
-bounded by the clamped window.
+the Spark-backed producer builds the events scan and nested projection
+once per server, and each request adds its window and filters to that
+plan and materializes it with one collect() bounded by `.limit()`.
 """
 
 from __future__ import annotations
@@ -78,23 +78,28 @@ def spark_records_fn(spark, sf_dir: str, max_rows: int | None = None) -> Records
     (960-min clamp) -> conjunctive filters -> flat id rows, i.e. the
     whole reference pipeline as one Catalyst plan per request.
 
-    Bounded materialization (the reference's failure mode is the whole
-    8 h window in one Node heap, responses/index.js:34): rows stream to
-    the driver partition-at-a-time via toLocalIterator and stop at the
-    resolved limit — a wide window never pins more than `limit` rows
-    plus one partition's Arrow batch on the heap. The plan itself gets
-    a `.limit()` so Spark can short-circuit scans where possible."""
-    from itertools import islice
+    The static part of the plan — the events scan and the nested
+    projection — is built once, here, not per request: a request only
+    adds its own window and predicates to it and runs its own Spark jobs.
+    So the server serves the table's files as they were listed when this
+    fn was built; files added later are not seen until a new fn (a new
+    server) is built. The window anchor is not fixed here: it is a
+    scalar subquery that each request's job computes over those files.
 
+    Bounded materialization (the reference's failure mode is the whole
+    8 h window in one Node heap, responses/index.js:34): the plan ends
+    in `.limit(cap)`, so one `collect()` runs as a CollectLimit and
+    never brings more than the resolved limit of rows to the driver."""
     from .operators.events import flatten_ids, to_nested
     from .plans.pipeline import records_plan
     from .sources.tables import load_events
 
+    nested = to_nested(load_events(spark, sf_dir))
+
     def fn(query: Mapping[str, str]) -> list[dict]:
         cap = response_limit(query, max_rows)
-        nested = to_nested(load_events(spark, sf_dir))
         out = flatten_ids(records_plan(nested, dict(query))).limit(cap)
-        return [row.asDict() for row in islice(out.toLocalIterator(), cap)]
+        return [row.asDict() for row in out.collect()]
 
     return fn
 

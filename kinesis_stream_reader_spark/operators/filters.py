@@ -160,13 +160,10 @@ def time_range_predicate(now: Column, duration: object | None = None) -> Column:
 def with_data_relative_window(df: DataFrame, duration: object | None = None) -> DataFrame:
     """Apply the lookback window anchored at the dataset's max event_time.
 
-    The anchor is computed as a 1-row aggregate broadcast-joined onto the
-    stream — fully declarative, no driver-side collect, safe at any
-    scale (the broadcast side is one row).
+    The anchor is an uncorrelated scalar subquery over the same input:
+    Spark runs it (one aggregate job) when the query executes, so a plan
+    built once and executed later still sees the data's max, and the
+    outer plan stays a plain filter — no join, no helper column, and no
+    driver-side collect.
     """
-    anchor = df.agg(F.max("event_time").alias("_now"))
-    return (
-        df.join(F.broadcast(anchor))
-        .filter(time_range_predicate(F.col("_now"), duration))
-        .drop("_now")
-    )
+    return df.filter(time_range_predicate(df.agg(F.max("event_time")).scalar(), duration))

@@ -136,8 +136,9 @@ def test_default_ceiling_bounds_unbounded_producer():
 
 
 def test_spark_records_fn_limit(spark, sf_dir):
-    """The Spark producer honors the per-request limit end-to-end and
-    streams (toLocalIterator) instead of collect()ing the window."""
+    """The Spark producer honors the per-request limit end-to-end: the
+    plan ends in `.limit(cap)`, so its one collect() brings at most the
+    resolved limit of rows to the driver."""
     fn = spark_records_fn(spark, sf_dir)
     rows = fn({"streamname": "events", "duration": "960", "limit": "5"})
     assert len(rows) == 5
@@ -178,3 +179,86 @@ def test_live_http_spark_pipeline(spark, sf_dir):
         assert len(body) > 0
     finally:
         server.shutdown()
+
+
+def test_spark_records_fn_builds_static_plan_once(spark, sf_dir, monkeypatch):
+    """The events scan and nested projection are built when the producer
+    is made, not per request."""
+    import kinesis_stream_reader_spark.operators.events as events
+    import kinesis_stream_reader_spark.sources.tables as tables
+
+    calls = {"load_events": 0, "to_nested": 0}
+
+    def counted(module, name):
+        original = getattr(module, name)
+
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return original(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, wrapper)
+
+    counted(tables, "load_events")
+    counted(events, "to_nested")
+    fn = spark_records_fn(spark, sf_dir)
+    for limit in ("1", "2", "3"):
+        assert len(fn({"streamname": "events", "duration": "960", "limit": limit})) == int(limit)
+    assert calls == {"load_events": 1, "to_nested": 1}
+
+
+def test_spark_records_fn_plan_has_no_join_and_caps_rows(spark, sf_dir, monkeypatch):
+    """The per-request plan anchors the window with a scalar subquery (no
+    join onto the stream) and is bounded to `cap` rows by its limit."""
+    df_class = type(spark.range(1))
+    collected = []
+    original = df_class.collect
+
+    def spy(self):
+        collected.append(self)
+        return original(self)
+
+    monkeypatch.setattr(df_class, "collect", spy)
+    fn = spark_records_fn(spark, sf_dir, max_rows=50)
+    fn({"streamname": "events", "duration": "960", "limit": "7"})
+    fn({"streamname": "events", "duration": "960", "tenantId": "12"})
+    assert len(collected) == 2
+    for df, cap in zip(collected, (7, 50)):
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert "Join" not in plan.toString()
+        assert "scalar-subquery" in plan.toString()
+        assert plan.maxRows().get() == cap
+
+
+@pytest.mark.parametrize(
+    "extra",
+    [
+        {"contactId": "480"},
+        {"agentId": "110"},
+        {"serverName": "SERVER-error"},
+        {"tenantId": "12"},
+        {"agentShiftId": "45"},
+        {"contactId": "abc"},  # parseInt NaN: matches nothing
+        {"tenantId": "12", "duration": "5000"},  # clamped to 960
+    ],
+    ids=["contactId", "agentId", "serverName", "tenantId", "agentShiftId",
+         "nan", "duration_clamp"],
+)
+def test_spark_records_fn_matches_fresh_plan(spark, sf_dir, extra):
+    """Responses from the reused plan equal a plan built fresh from the
+    table for the same query."""
+    from kinesis_stream_reader_spark.operators.events import flatten_ids, to_nested
+    from kinesis_stream_reader_spark.plans.pipeline import records_plan
+    from kinesis_stream_reader_spark.sources.tables import load_events
+
+    query = {"streamname": "events", "duration": "960", **extra}
+    got = spark_records_fn(spark, sf_dir)(query)
+    want = [
+        r.asDict()
+        for r in flatten_ids(records_plan(to_nested(load_events(spark, sf_dir)), query)).collect()
+    ]
+    key = lambda d: d["event_id"]  # noqa: E731
+    assert sorted(got, key=key) == sorted(want, key=key)
+    if extra.get("contactId") == "abc":
+        assert got == []
+    else:
+        assert got

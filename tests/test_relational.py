@@ -1559,6 +1559,35 @@ def test_pca_power_iteration_numpy_reference(spark, sf_dir):
     assert rq(vf) > rq(v0)
 
 
+def test_pca_power_iteration_zero_norm_matches_oracle(spark, tmp_path):
+    """All-zero embeddings give a zero normalizer in round 1: the result
+    must equal the registry query's DuckDB oracle (NULL loadings)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kinesis_stream_reader_spark.registry import ORACLES, QUERIES
+
+    n, dim = 20, 64
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(n), pa.int64()),
+            "embedding": pa.array([[0.0] * dim] * n, pa.list_(pa.float32())),
+            "label": pa.array([0] * n, pa.int32()),
+        }),
+        tmp_path / "embeddings.parquet",
+    )
+    got = [
+        tuple(r)
+        for r in QUERIES["pca_power_iteration"](spark, str(tmp_path)).orderBy("d").collect()
+    ]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet'")
+    want = con.sql(ORACLES["pca_power_iteration"]).fetchall()
+    assert got == want
+    assert want == [(d, None, None) for d in range(dim)]
+
+
 def test_incremental_join_merge_equals_full(spark, sf_dir):
     """Four-leg delta-join merge must equal the full-recompute join."""
     from kinesis_stream_reader_spark.registry import QUERIES

@@ -112,9 +112,9 @@ def test_local_dir_explicit_override_any_master(monkeypatch):
     from kinesis_stream_reader_spark import session
 
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "/somewhere/fast")
-    # explicit operator override is honored for any master; FAST_TMP was
-    # resolved at import time, so the function returns the module value
-    assert session._local_dir_for("spark://node:7077") == session.FAST_TMP
+    # explicit operator override is honored for any master, even when
+    # set after the module was imported
+    assert session._local_dir_for("spark://node:7077") == "/somewhere/fast"
 
 
 # ---------------------------------------------------------------------------
